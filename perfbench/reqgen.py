@@ -1,13 +1,20 @@
-"""Seeded report requests and their DuckDB SQL twins.
+"""Seeded report sessions and the DuckDB SQL twin of every request.
 
 The report service is ``examples/report_service.py``: orders joined to
-customer, declared once by ``build_spec()``.  A request is either a
-``QueryParams`` page (offset or keyset) over that spec, or a JSON query
-for ``compile_json_query``.  Every request carries a SQL twin that
-states, independently of the engine, what the page must contain: the
-spec's semantics are written out below (declaration order, the
-``balance`` → ``raw_balance`` order redirect, which columns accept
-filters and LIKE, silently ignored names).
+customer, declared once by ``build_spec()``.  A session follows that
+example's request flow.  One client request (filters, orders, a
+projection) is served as offset page 1, then as keyset pages whose
+cursor is the previous page's last row.  Each session also sends one
+JSON query for ``compile_json_query``.
+
+Every request carries a SQL twin that states, independently of the
+engine, what the page must contain: the spec's semantics are written
+out below (declaration order, the ``balance`` → ``raw_balance`` order
+redirect, which columns accept filters and LIKE, silently ignored
+names).  A keyset page's cursor comes from the engine's previous page
+at run time, so its twin is the OFFSET page at the same depth: with a
+unique tiebreak key, the keyset walk is row-for-row the OFFSET walk (the
+example asserts this).
 
 The generator is pure Python: the same seed yields the same requests
 and the same SQL, with no Spark session involved.
@@ -36,6 +43,14 @@ SPEC = [
 _COL = {c[0]: c for c in SPEC}
 VISIBLE = [c[0] for c in SPEC if c[2]]
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+#: Where a keyset cursor takes each effective sort key from, in the
+#: previous page's rendered row.  ``raw_balance`` is hidden; the visible
+#: ``balance`` shows the same two-decimal value.
+CURSOR_SOURCE = {"raw_balance": "balance", "key": "key", "total": "total"}
+#: Keyset pages per session after offset page 1.  An assumption: the
+#: example walks to the end of the result, and nothing in the repository
+#: says how deep a client reads.
+KEYSET_PAGES = 3
 BASE_SQL = (
     "SELECT " + ", ".join(f'{expr} AS "{name}"' for name, expr, *_ in SPEC)
     + " FROM orders JOIN customer ON o_custkey = c_custkey"
@@ -44,8 +59,9 @@ BASE_SQL = (
 
 @dataclass
 class Request:
-    """One report request: ``params`` (QueryParams keyword arguments)
-    or ``json`` (a compile_json_query spec), and its SQL twin."""
+    """One report request: ``params`` (QueryParams keyword arguments; a
+    keyset page's lack its ``after_key``) or ``json`` (a
+    compile_json_query spec), and its SQL twin."""
 
     rid: int
     kind: str  # "offset" | "keyset" | "json"
@@ -89,6 +105,9 @@ def effective_keys(orders: list) -> list[tuple[str, bool]]:
 
 
 def _random_filters(rng: random.Random) -> dict[str, dict[str, Any]]:
+    """Filters of one session.  The probabilities are assumptions; the
+    ranges keep at least about a thousand matching rows at sf0.1, so
+    every page of a session is full."""
     f: dict[str, dict[str, Any]] = {}
     r = rng.random()
     if r < 0.3:
@@ -102,7 +121,7 @@ def _random_filters(rng: random.Random) -> dict[str, dict[str, Any]]:
         f["raw_balance"] = {"gt": round(rng.uniform(-500, 9000), 2)}
     elif r < 0.65:
         lo = round(rng.uniform(-999, 8000), 2)
-        f["raw_balance"] = {"between": [lo, round(lo + rng.uniform(50, 3000), 2)]}
+        f["raw_balance"] = {"between": [lo, round(lo + rng.uniform(500, 3000), 2)]}
     # names and operators the spec does not allow: silently ignored
     if rng.random() < 0.2:
         f[rng.choice(["total", "not_a_column", "customer"])] = {"gt": 1}
@@ -112,6 +131,8 @@ def _random_filters(rng: random.Random) -> dict[str, dict[str, Any]]:
 
 
 def _random_orders(rng: random.Random) -> list:
+    """Orders of one session (probabilities are assumptions), always
+    with the unique tiebreak ``key``."""
     orders: list = []
     for name in rng.sample(["total", "balance", "raw_balance", "customer"], rng.randint(0, 2)):
         orders.append(name if rng.random() < 0.3 else (name, rng.random() < 0.5))
@@ -121,7 +142,8 @@ def _random_orders(rng: random.Random) -> list:
     return orders
 
 
-def _params_sql(p: dict[str, Any]) -> str:
+def _params_sql(p: dict[str, Any], page: int) -> str:
+    """The twin of page ``page`` (from 1) of the request ``p``."""
     where = [
         _filter_sql(name, op, v)
         for name, ops in p.get("filters", {}).items()
@@ -130,14 +152,6 @@ def _params_sql(p: dict[str, Any]) -> str:
         if op != "like" or _COL[name][6]
     ]
     keys = effective_keys(p.get("orders", []))
-    after = p.get("after_key")
-    if after is not None:
-        disjuncts = []
-        for i, (name, desc) in enumerate(keys):
-            conj = [f'"{k}" = {_lit(after[k])}' for k, _ in keys[:i]]
-            conj.append(f'"{name}" {"<" if desc else ">"} {_lit(after[name])}')
-            disjuncts.append("(" + " AND ".join(conj) + ")")
-        where.append("(" + " OR ".join(disjuncts) + ")")
     select = p.get("select")
     cols = [c for c in VISIBLE if select is None or c in select]
     sql = f"SELECT {', '.join(f'{chr(34)}{c}{chr(34)}' for c in cols)} FROM ({BASE_SQL}) t"
@@ -146,11 +160,7 @@ def _params_sql(p: dict[str, Any]) -> str:
     sql += " ORDER BY " + ", ".join(
         f'"{k}" {"DESC" if d else "ASC"} NULLS LAST' for k, d in keys
     )
-    if "take" in p:
-        sql += f" LIMIT {p['take']}"
-    else:
-        sql += f" LIMIT {p['page_size']} OFFSET {(p['page_index'] - 1) * p['page_size']}"
-    return sql
+    return sql + f" LIMIT {PAGE} OFFSET {(page - 1) * PAGE}"
 
 
 _JSON_DIMS = {
@@ -212,53 +222,43 @@ def _json_request(rng: random.Random) -> tuple[dict[str, Any], str]:
     return spec, sql + f" LIMIT {spec['take']}"
 
 
-#: Kinds of one block of requests: the mix is fixed block by block, so
-#: runs of different seeds see nearly the same mix.
-BLOCK = ["json"] * 3 + ["offset"] * 4 + ["keyset"] * 3
-
-
-def stream(seed: int, n_orders: int) -> Iterator[Request]:
-    """Endless requests from ``seed``, in blocks of ``BLOCK``'s kinds in
-    seeded order.  ``n_orders`` bounds cursor keys."""
-    rng = random.Random(seed)
-    rid = itertools.count()
-    while True:
-        kinds = list(BLOCK)
-        rng.shuffle(kinds)
-        for kind in kinds:
-            yield _request(rng, next(rid), kind, n_orders)
-
-
-def _request(rng: random.Random, rid: int, kind: str, n_orders: int) -> Request:
-    if kind == "json":
-        spec, sql = _json_request(rng)
-        return Request(rid, kind, sql, json=spec)
+def session(rng: random.Random, first_rid: int) -> list[Request]:
+    """One session: offset page 1, ``KEYSET_PAGES`` keyset pages of the
+    same request, then one JSON query (its share, one op in
+    ``KEYSET_PAGES + 2``, is an assumption)."""
     p: dict[str, Any] = {"filters": _random_filters(rng), "orders": _random_orders(rng)}
     if rng.random() < 0.5:
+        # a projection keeps the columns the cursor is read from
         p["select"] = rng.sample(VISIBLE + ["nope"], rng.randint(1, 4))
-        if not set(p["select"]) & set(VISIBLE):
-            p["select"].append("key")
-    if kind == "offset":
-        p["page_index"] = rng.randint(1, 30)
-        p["page_size"] = PAGE
-    else:
-        p["take"] = PAGE
-        bounds = {
-            "raw_balance": round(rng.uniform(-999.99, 9999.99), 2),
-            "key": rng.randrange(n_orders),
-            "total": round(rng.uniform(1000, 500000), 2),
-        }
-        p["after_key"] = {k: bounds[k] for k, _ in effective_keys(p["orders"])}
-    return Request(rid, kind, _params_sql(p), params=p)
+        for k, _ in effective_keys(p["orders"]):
+            if CURSOR_SOURCE[k] not in p["select"]:
+                p["select"].append(CURSOR_SOURCE[k])
+    pages = [Request(first_rid, "offset", _params_sql(p, 1),
+                     params={**p, "page_index": 1, "page_size": PAGE})]
+    for i in range(1, KEYSET_PAGES + 1):
+        # after_key is filled in at run time from the previous page
+        pages.append(Request(first_rid + i, "keyset", _params_sql(p, i + 1),
+                             params={**p, "take": PAGE}))
+    spec, sql = _json_request(rng)
+    return pages + [Request(first_rid + len(pages), "json", sql, json=spec)]
 
 
-def warmup(seed: int, n_orders: int) -> list[Request]:
-    """Three requests of each kind, for the set-up's warm-up pass."""
+def cursor(params: dict[str, Any], last_row: dict[str, Any]) -> dict[str, Any]:
+    """The keyset cursor after ``last_row``, a rendered row of the
+    previous page: each effective sort key's value."""
+    return {k: last_row[CURSOR_SOURCE[k]] for k, _ in effective_keys(params["orders"])}
+
+
+def sessions(seed: int) -> Iterator[list[Request]]:
+    """Endless sessions from ``seed``."""
     rng = random.Random(seed)
-    return [_request(rng, i, kind, n_orders)
-            for i, kind in enumerate(["json", "offset", "keyset"] * 3)]
+    rid = 0
+    while True:
+        s = session(rng, rid)
+        rid += len(s)
+        yield s
 
 
-def generate(seed: int, count: int, n_orders: int) -> list[Request]:
-    """The first ``count`` requests of ``stream(seed, n_orders)``."""
-    return list(itertools.islice(stream(seed, n_orders), count))
+def generate(seed: int, count: int) -> list[list[Request]]:
+    """The first ``count`` sessions of ``sessions(seed)``."""
+    return list(itertools.islice(sessions(seed), count))

@@ -73,16 +73,25 @@ def _duck(data_dir: str):
     return con
 
 
-def _store_live_bytes(stores_dir: str) -> dict[str, int]:
-    """Bytes of the current version of every versioned store."""
+def _store_versions(stores_dir: str) -> dict[str, tuple[int, int]]:
+    """(current version, its bytes) of every versioned store."""
     from ubw_spark.operators.versioned import MANIFEST, store_stats
 
     out = {}
     for root, _dirs, files in os.walk(stores_dir):
         if MANIFEST in files:
             st = store_stats(root)
-            out[root] = st["versions"].get(st["current"], {}).get("bytes", 0)
+            out[root] = (st["current"],
+                         st["versions"].get(st["current"], {}).get("bytes", 0))
     return out
+
+
+def made_current(before: dict[str, tuple[int, int]],
+                 after: dict[str, tuple[int, int]]) -> int:
+    """Bytes of the store versions that became current between two
+    ``_store_versions`` snapshots: a new store, or a new current version
+    of an existing one (a rewrite of the same size included)."""
+    return sum(b for p, (v, b) in after.items() if before.get(p, (None,))[0] != v)
 
 
 def _stop(spark) -> None:
@@ -161,21 +170,21 @@ def main(argv: list[str]) -> int:
     # -- timed phase (with --trace 1, every second pass is traced) -------
     tracer = tracing.Tracer(spark) if args.trace else None
     useful_b = orphans = 0
+    live: dict[str, tuple[int, int]] = {}
+
+    def store_before(op) -> None:
+        nonlocal live
+        live = _store_versions(paths["stores"])
+
+    def store_after(op) -> None:
+        nonlocal useful_b
+        useful_b += made_current(live, _store_versions(paths["stores"]))
+
     if tracer is not None:
         listener, batches = tracing.stream_listener(spark)
-        live = _store_live_bytes(paths["stores"])
-
-        def store_delta(op) -> None:
-            # bytes of the store versions this traced op left current
-            nonlocal live, useful_b
-            after = _store_live_bytes(paths["stores"])
-            useful_b += sum(b for p, b in after.items() if live.get(p) != b)
-            live = after
-
-    ops, elapsed = workloads.run_ops(
-        workload, spark, args.seconds, tracer,
-        store_delta if tracer is not None else lambda op: None,
-    )
+    ops = workloads.run_ops(workload, spark, args.seconds, tracer,
+                            store_before, store_after)
+    elapsed = sum(op.wall for op in ops)
     jvm_pid = spark.sparkContext._gateway.proc.pid
     peak_rss_mb = (_hwm_kb("self") + _hwm_kb(jvm_pid)) / 1024
     if tracer is not None:
@@ -195,7 +204,10 @@ def main(argv: list[str]) -> int:
             f.write(json.dumps({"op": op.id, "name": op.name, "wall_s": op.wall,
                                 "traced": op.traced, "error": op.error,
                                 "check": op.check}) + "\n")
-    store_mb = sum(_store_live_bytes(paths["stores"]).values()) / MB
+    stores = _store_versions(paths["stores"])
+    store_mb = sum(b for _v, b in stores.values()) / MB
+    # the stores must have landed in the run's scratch, not under /tmp
+    isolated = redirected > 0 and (bool(stores) or not workload.writes_stores)
     _stop(spark)
     check_s = time.perf_counter() - t_check
 
@@ -203,10 +215,10 @@ def main(argv: list[str]) -> int:
     plain = [op for op in ops if not op.traced]
     traced = [op for op in ops if op.traced]
     walls = [op.wall * 1000 for op in plain]
+    ops_per_s = len(plain) / sum(op.wall for op in plain)
     if tracer is None:
-        metrics = _e2e_metrics(start_s + warm_s, len(ops) / elapsed, walls, peak_rss_mb)
+        metrics = _e2e_metrics(start_s + warm_s, ops_per_s, walls, peak_rss_mb)
     else:
-        ops_per_s = len(plain) / sum(op.wall for op in plain)
         traced_per_s = len(traced) / sum(op.wall for op in traced)
         metrics = _layer_metrics(tracer.spans, traced, batches, start_s, warm_s,
                                  store_mb, useful_b, orphans, ops_per_s / traced_per_s)
@@ -216,7 +228,7 @@ def main(argv: list[str]) -> int:
           f"input generation {gen_s:.1f}s store constants redirected {redirected}")
     print(f"set-up {start_s:.2f}s session + {warm_s:.2f}s warm-up; check and stop "
           f"{check_s:.1f}s; run so far {time.perf_counter() - T_PROCESS:.1f}s")
-    print(f"ops {len(ops)} in {elapsed:.2f}s, {len(traced)} of them traced")
+    print(f"ops {len(ops)} in {elapsed:.2f}s of op wall time, {len(traced)} of them traced")
     kinds: dict[str, list[float]] = {}
     for op in plain:
         kinds.setdefault(op.name, []).append(op.wall * 1000)
@@ -226,7 +238,8 @@ def main(argv: list[str]) -> int:
     if tail is not None:
         print(f"latency_p{tail}_ms {stats.percentile(walls, tail):.3f} ms "
               f"({len(walls)} samples)")
-    print(f"store_mb {store_mb:.3f} MB (live store versions after the run)")
+    print(f"store_mb {store_mb:.3f} MB in {len(stores)} stores (live versions after "
+          f"the run){'' if isolated else '; NOT ISOLATED: stores missing from the scratch'}")
     if tracer is not None:
         cover = metrics["trace.coverage_min"][0]
         print(f"trace check: layer spans cover at least {cover:.4f} of every traced "
@@ -239,7 +252,7 @@ def main(argv: list[str]) -> int:
     for op in failed[:5]:
         print(f"  FAIL op {op.id} {op.name}: {op.error or op.check}")
     print(stats.result_line(
-        correct=not failed and not warm_errors and bool(ops),
+        correct=not failed and not warm_errors and bool(ops) and isolated,
         attempted=max(1, len(ops)), failed=len(failed) if ops else 1,
         metrics=metrics, declared=declared,
     ))

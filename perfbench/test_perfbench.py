@@ -23,17 +23,45 @@ with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as _f:
 
 
 def test_same_seed_same_requests_and_twins():
-    a = reqgen.generate(5, 60, 150_000)
-    b = reqgen.generate(5, 60, 150_000)
+    a = reqgen.generate(5, 12)
+    b = reqgen.generate(5, 12)
     assert a == b
-    assert [r.sql for r in a] == [r.sql for r in b]
-    assert a != reqgen.generate(6, 60, 150_000)
+    assert [r.sql for s in a for r in s] == [r.sql for s in b for r in s]
+    assert a != reqgen.generate(6, 12)
 
 
-def test_every_block_has_the_same_mix():
-    kinds = [r.kind for r in reqgen.generate(9, 5 * len(reqgen.BLOCK), 1000)]
-    for i in range(0, len(kinds), len(reqgen.BLOCK)):
-        assert sorted(kinds[i:i + len(reqgen.BLOCK)]) == sorted(reqgen.BLOCK)
+def test_every_session_follows_the_example_flow():
+    for s in reqgen.generate(9, 40):
+        assert [r.kind for r in s] == (
+            ["offset"] + ["keyset"] * reqgen.KEYSET_PAGES + ["json"]
+        )
+        assert s[0].params["page_index"] == 1
+        assert [r.rid for r in s] == list(range(s[0].rid, s[0].rid + len(s)))
+        request = {k: v for k, v in s[0].params.items()
+                   if k not in ("page_index", "page_size")}
+        for r in s[1:-1]:
+            assert {k: v for k, v in r.params.items() if k != "take"} == request
+            assert "after_key" not in r.params
+
+
+def test_keyset_twin_is_the_offset_page_at_the_same_depth():
+    for s in reqgen.generate(3, 40):
+        for page, r in enumerate(s[:-1], start=1):
+            assert r.sql.endswith(f"LIMIT {reqgen.PAGE} OFFSET {(page - 1) * reqgen.PAGE}")
+            assert r.sql.split(" LIMIT ")[0] == s[0].sql.split(" LIMIT ")[0]
+
+
+def test_cursor_reads_every_effective_key_from_the_rendered_row():
+    for s in reqgen.generate(4, 60):
+        p = s[1].params
+        keys = [k for k, _ in reqgen.effective_keys(p["orders"])]
+        assert "key" in keys
+        if "select" in p:
+            assert {reqgen.CURSOR_SOURCE[k] for k in keys} <= set(p["select"])
+        row = {"key": 7, "total": 12.5, "balance": -3.25, "customer": "c"}
+        assert sorted(reqgen.cursor(p, row)) == sorted(keys)
+    assert reqgen.cursor({"orders": ["balance", "key"]},
+                         {"key": 3, "balance": 1.5}) == {"raw_balance": 1.5, "key": 3}
 
 
 def test_twin_follows_the_spec_semantics():
@@ -43,20 +71,19 @@ def test_twin_follows_the_spec_semantics():
     ]
     p = {"filters": {"segment": {"like": "%X%"}, "raw_balance": {"like": "1%"},
                      "total": {"gt": 1}, "nope": {"eq": 2}},
-         "orders": ["key"], "select": ["customer", "nope"], "take": 15}
-    sql = reqgen._params_sql(p)
+         "orders": ["key"], "select": ["customer", "nope"]}
+    sql = reqgen._params_sql(p, 3)
     assert '"segment" LIKE' in sql
     assert '"raw_balance" LIKE' not in sql and '"total" >' not in sql
     assert sql.startswith('SELECT "customer" FROM')
-    assert sql.endswith('ORDER BY "key" ASC NULLS LAST LIMIT 15')
+    assert sql.endswith('ORDER BY "key" ASC NULLS LAST LIMIT 15 OFFSET 30')
 
 
-def test_keyset_cursor_names_exactly_the_effective_keys():
-    for r in reqgen.generate(3, 200, 1000):
-        if r.kind == "keyset":
-            keys = [k for k, _ in reqgen.effective_keys(r.params["orders"])]
-            assert sorted(r.params["after_key"]) == sorted(keys)
-            assert "key" in keys
+def test_made_current_counts_new_stores_and_rewrites():
+    before = {"a": (1, 100), "b": (2, 50)}
+    after = {"a": (1, 100), "b": (3, 50), "c": (1, 7)}
+    assert run.made_current(before, after) == 57
+    assert run.made_current(after, after) == 0
 
 
 def test_tail_percentile_needs_ten_samples_beyond():
