@@ -73,11 +73,7 @@ def ingest(
     {n_docs, n_chunks, centroids} (centroids are needed to probe)."""
     from ubw_spark.operators.chunking import chunk_documents
     from ubw_spark.operators.ivf import train_ivf_centroids, write_ivf_index
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        resolve_root,
-    )
+    from ubw_spark.operators.versioned import StoreWriter, resolve_root
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     chunks = chunk_documents(
@@ -88,11 +84,12 @@ def ingest(
     # The chunk store is versioned like the index: update() rewrites it
     # on deletions via the same manifest swap.
     chunks_path = os.path.join(out, "chunks")
-    cur, new_v, root = begin_rewrite(chunks_path)
-    chunks.select(
-        "chunk_id", "doc_id", "chunk_idx", "chunk_start", "chunk_text"
-    ).write.mode("overwrite").parquet(root)
-    commit_rewrite(chunks_path, cur, new_v)
+    with StoreWriter(chunks_path, None) as w:
+        w.write(
+            chunks.select(
+                "chunk_id", "doc_id", "chunk_idx", "chunk_start", "chunk_text"
+            )
+        )
     chunks = spark.read.parquet(resolve_root(chunks_path))
 
     emb = embed_texts(chunks, "chunk_id", "chunk_text", dim).select(
@@ -155,8 +152,9 @@ def update(
         compact_term_index,
     )
     from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
+        StoreWriter,
+        append_pinned,
+        read_store,
         resolve_root,
     )
 
@@ -165,7 +163,9 @@ def update(
 
     n_dropped = 0
     if deleted_doc_ids is not None:
-        live_chunks = spark.read.parquet(resolve_root(chunks_path))
+        live_chunks, _, chunks_v = read_store(
+            spark, chunks_path, None, "chunk store"
+        )
         drop = live_chunks.join(deleted_doc_ids, "doc_id").select(
             F.col("chunk_id").alias("vec_id")
         )
@@ -178,9 +178,8 @@ def update(
                 id_col="chunk_id",
             )
             kept = live_chunks.join(deleted_doc_ids, "doc_id", "left_anti")
-            cur, new_v, new_root = begin_rewrite(chunks_path)
-            kept.write.mode("overwrite").parquet(new_root)
-            commit_rewrite(chunks_path, cur, new_v)
+            with StoreWriter(chunks_path, None, chunks_v) as w:
+                w.write(kept)
 
     chunks = (
         chunk_documents(
@@ -195,7 +194,7 @@ def update(
     )
     n_new = chunks.count()
     if n_new:
-        chunks.write.mode("append").parquet(resolve_root(chunks_path))
+        append_pinned(chunks, resolve_root(chunks_path))
         emb = embed_texts(chunks, "chunk_id", "chunk_text", dim).select(
             F.col("chunk_id").alias("vec_id"), "embedding"
         )

@@ -338,26 +338,32 @@ def test_compact_preserves_batch_high_water(spark, docs_df, tmp_path):
 
 
 def test_append_recovers_from_torn_version_dir(spark, docs_df, tmp_path):
-    """A crash between link_carryover and the manifest flip leaves a
-    torn vNNNNN dir that begin_rewrite re-issues; the next append must
-    clear it and succeed (not SameFileError on its own leftover
-    hardlinks, not double-folded postings)."""
+    """A crash between the carryover and the manifest flip leaves a
+    torn vNNNNN dir; the next append must step past it and succeed
+    (not SameFileError on the leftover hardlinks, not double-folded
+    postings) and never flip to the torn dir."""
+    import os
+
     from ubw_spark.operators.versioned import (
-        begin_rewrite,
+        current_version,
         link_carryover,
         resolve_root,
+        version_dir,
     )
 
     path = str(tmp_path / "ti_torn")
     first = docs_df.where(F.col("doc_id") < 3)
     rest = docs_df.where(F.col("doc_id") >= 3)
     write_term_index(first, "doc_id", "text", path)
-    # simulate the crashed attempt: carryover done, no commit
+    # simulate the crashed attempt by hand: the next version dir holds
+    # the carried-over postings, and the manifest never flipped
     old_root = resolve_root(path)
-    _cur, _new_v, torn_root = begin_rewrite(path)
+    torn_root = version_dir(path, current_version(path) + 1)
+    os.makedirs(torn_root)
     link_carryover(old_root, torn_root, skip_files=("_TERM_STATS",))
     # the retry (or any next batch) must fold exactly once
     append_term_batch(rest, "doc_id", "text", path, batch_id=1)
+    assert resolve_root(path) not in (old_root, torn_root)
     st = read_term_stats(path)
     assert st["n_docs"] == len(DOCS)
     q = "hash join slow stream"

@@ -210,8 +210,7 @@ def test_versioned_store_survives_six_digit_versions(tmp_path):
     import os
 
     from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
+        StoreWriter,
         current_version,
         resolve_root,
         version_dir,
@@ -225,10 +224,9 @@ def test_versioned_store_survives_six_digit_versions(tmp_path):
     assert current_version(path) == 100000
     assert resolve_root(path).endswith("v100000")
 
-    cur, new_v, new_root = begin_rewrite(path)
-    assert new_v == 100001
-    os.makedirs(new_root)
-    commit_rewrite(path, cur, new_v, legacy_names=("bands",))
+    with StoreWriter(path, None, legacy_names=("bands",)) as w:
+        assert w.version == 100001
+        assert os.path.isdir(w.root)
     assert current_version(path) == 100001
     dirs = sorted(d for d in os.listdir(path) if d.startswith("v"))
     # v99999 GC'd (older than grace), v100000 grace-kept, live intact
@@ -236,11 +234,11 @@ def test_versioned_store_survives_six_digit_versions(tmp_path):
 
 
 def test_versioned_legacy_sweep_only_deletes_named_dirs(tmp_path):
-    """commit_rewrite must never delete a co-located directory it was
-    not told about (review finding, round 8)."""
+    """The store writer's commit must never delete a co-located
+    directory it was not told about (review finding, round 8)."""
     import os
 
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
+    from ubw_spark.operators.versioned import StoreWriter
 
     path = str(tmp_path / "store")
     os.makedirs(os.path.join(path, "bands"))
@@ -250,12 +248,10 @@ def test_versioned_legacy_sweep_only_deletes_named_dirs(tmp_path):
         f.write("0")
     os.makedirs(os.path.join(path, "v00000"))
 
-    cur, new_v, root = begin_rewrite(path)
-    os.makedirs(root)
-    commit_rewrite(
-        path, cur, new_v,
-        legacy_names=("bands",), legacy_prefixes=("ivf_cell=",),
-    )
+    with StoreWriter(
+        path, None, legacy_names=("bands",), legacy_prefixes=("ivf_cell=",)
+    ):
+        pass
     left = sorted(os.listdir(path))
     assert "user_backup" in left       # untouched: not named
     assert "bands" not in left         # named legacy store removed

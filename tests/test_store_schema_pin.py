@@ -228,3 +228,34 @@ def test_probe_results_identical_with_and_without_pin(spark, tmp_path):
         spark, path, probe, "doc_id", "text", threshold=0.2
     ).collect()
     assert sorted(map(tuple, with_pin)) == sorted(map(tuple, without_pin))
+
+
+def test_wide_integral_partition_pins_bigint(spark, tmp_path):
+    """Partition TYPE inference parses the written ``col=value`` dir
+    names: a value past int32 reads back as bigint, so the pin must
+    say bigint too — an int pin would read that partition as null (or
+    throw under ANSI).  Covers the writer's pin and the re-pin after
+    an in-place append that first crosses int32."""
+    from ubw_spark.operators.versioned import StoreWriter, append_pinned
+
+    wide = 2**31 + 5
+    schema = "id bigint, part bigint"
+    path = str(tmp_path / "wide")
+    with StoreWriter(path, None) as w:
+        w.write(
+            spark.createDataFrame([(1, 3), (2, wide)], schema),
+            partition_by="part",
+        )
+    root = resolve_root(path)
+    _assert_pinned_matches_inference(spark, root)
+    got = sorted(map(tuple, read_pinned_parquet(spark, root).collect()))
+    assert got == [(1, 3), (2, wide)]
+
+    path = str(tmp_path / "widened")
+    with StoreWriter(path, None) as w:
+        w.write(spark.createDataFrame([(1, 3)], schema), partition_by="part")
+    root = resolve_root(path)
+    append_pinned(spark.createDataFrame([(2, wide)], schema), root, "part")
+    _assert_pinned_matches_inference(spark, root)
+    got = sorted(map(tuple, read_pinned_parquet(spark, root).collect()))
+    assert got == [(1, 3), (2, wide)]

@@ -324,32 +324,12 @@ def bloom_audit(
 PARAMS_FILE = "_BLOOM_PARAMS"
 
 
-def _write_params(root: str, n: int, m: int, k: int) -> None:
-    import json
-    import os
-
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, PARAMS_FILE), "w") as f:
-        json.dump({"n": n, "m": m, "k": k}, f)
-
-
 def read_bloom_params(path: str) -> dict:
     """(n, m, k) of the LIVE store version; raises if the sidecar is
     missing — probing with guessed params is the silent-zero failure."""
-    import json
-    import os
+    from ubw_spark.operators.versioned import read_params
 
-    from ubw_spark.operators.versioned import resolve_root
-
-    p = os.path.join(resolve_root(path), PARAMS_FILE)
-    try:
-        with open(p) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise ValueError(
-            f"bloom store at {path} has no {PARAMS_FILE} sidecar — not a "
-            "bloom store (or written by hand); refusing to guess (n, m, k)"
-        ) from None
+    return read_params(path, PARAMS_FILE, "bloom")[0]
 
 
 def write_bloom_store(
@@ -366,19 +346,14 @@ def write_bloom_store(
     ``(word_idx, bits)`` parquet + params sidecar into a fresh version
     dir, then flip ``_CURRENT`` (one small-object write; previous
     version grace-kept — operators/versioned.py)."""
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
+    from ubw_spark.operators.versioned import StoreWriter
 
     packed = packed_bloom_words(
         bench, text_col, n=n, m=m, k=k, parallelism=parallelism
     )
-    cur, new_v, new_root = begin_rewrite(path)
-    # ≤ m/64 rows of two bigints: one file reads in one footer+scan
-    packed.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(new_root, packed.schema)
-    _write_params(new_root, n, m, k)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, PARAMS_FILE, params={"n": n, "m": m, "k": k}) as w:
+        # ≤ m/64 rows of two bigints: one file reads in one footer+scan
+        w.write(packed.coalesce(1))
 
 
 def append_bloom_store(
@@ -395,16 +370,9 @@ def append_bloom_store(
     unioned with the batch's, bit_or-merged per word — cost ∝ batch +
     m/64, never ∝ the accumulated benchmark.  Params come from the
     store's sidecar; the batch CANNOT override them."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        read_pinned_parquet,
-        resolve_root,
-    )
+    from ubw_spark.operators.versioned import StoreWriter, read_store
 
-    p = read_bloom_params(path)
-    old = read_pinned_parquet(spark, resolve_root(path))
+    old, p, version = read_store(spark, path, PARAMS_FILE, "bloom")
     new = packed_bloom_words(
         batch, text_col, n=p["n"], m=p["m"], k=p["k"],
         parallelism=parallelism,
@@ -415,22 +383,17 @@ def append_bloom_store(
         .groupBy("word_idx")
         .agg(F.expr("bit_or(mask)").alias("bits"))
     )
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    _write_params(new_root, p["n"], p["m"], p["k"])
-    commit_rewrite(path, cur, new_v)
+    params = {"n": p["n"], "m": p["m"], "k": p["k"]}
+    with StoreWriter(path, PARAMS_FILE, version, params=params) as w:
+        w.write(merged.coalesce(1))
 
 
 def load_bloom(spark, path: str) -> tuple[DataFrame, dict]:
-    """(one-row dense filter, params) from the live store version."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        resolve_root,
-    )
+    """(one-row dense filter, params) from the live store version —
+    sidecar and packed words from ONE resolve of the manifest."""
+    from ubw_spark.operators.versioned import read_store
 
-    p = read_bloom_params(path)
-    packed = read_pinned_parquet(spark, resolve_root(path))
+    packed, p, _ = read_store(spark, path, PARAMS_FILE, "bloom")
     return dense_bloom_row(packed, p["m"]), p
 
 

@@ -245,11 +245,7 @@ def write_hll_store(registers: DataFrame, path: str) -> None:
     registers parquet + precision sidecar into a fresh version dir,
     then flip ``_CURRENT`` (operators/versioned.py).  <= 2^p rows of
     two ints: one coalesced file."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     p = _check_p(registers, "write_hll_store")
     extra = [c for c in registers.columns if c not in ("bucket", "r")]
@@ -258,13 +254,18 @@ def write_hll_store(registers: DataFrame, path: str) -> None:
             f"write_hll_store: store registers must be ungrouped "
             f"(bucket, r); got extra columns {extra}"
         )
-    cur, new_v, new_root = begin_rewrite(path)
-    registers.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
+    with StoreWriter(path, PARAMS_FILE, params={"p": p}) as w:
+        w.write(registers.coalesce(1))
 
-    pin_schema(new_root, registers.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"p": p})
-    commit_rewrite(path, cur, new_v)
+
+def _read_hll(spark, path: str) -> tuple[DataFrame, dict, int | None]:
+    from ubw_spark.operators.versioned import read_store
+
+    df, params, version = read_store(spark, path, PARAMS_FILE, "hll")
+    regs = df.select(
+        "bucket", F.col("r").alias("r", metadata={"hll_p": params["p"]})
+    )
+    return regs, params, version
 
 
 def load_hll(spark, path: str) -> tuple[DataFrame, dict]:
@@ -272,19 +273,7 @@ def load_hll(spark, path: str) -> tuple[DataFrame, dict]:
     ONCE for sidecar + data (a double resolve could straddle a rewrite),
     precision re-pinned from the sidecar (the authority) onto the ``r``
     metadata."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
-
-    root = resolve_root(path)
-    params = read_sidecar(root, PARAMS_FILE, "hll")
-    df = read_pinned_parquet(spark, root)
-    regs = df.select(
-        "bucket", F.col("r").alias("r", metadata={"hll_p": params["p"]})
-    )
-    return regs, params
+    return _read_hll(spark, path)[:2]
 
 
 def append_hll_batch(spark, batch: DataFrame, item_col: str, path: str) -> None:
@@ -295,9 +284,9 @@ def append_hll_batch(spark, batch: DataFrame, item_col: str, path: str) -> None:
     semantic no-op and no batch_id bookkeeping exists here (contrast
     ``append_cms_batch``).  Precision comes from the store's sidecar;
     the batch cannot override it."""
-    old, params = load_hll(spark, path)
+    old, params, version = _read_hll(spark, path)
     new = hll_build(batch, item_col, p=params["p"])
-    _merge_and_flip(spark, old, new, params, path)
+    _merge_and_flip(old, new, params, version, path)
 
 
 def append_hll_registers(spark, registers: DataFrame, path: str) -> None:
@@ -309,26 +298,19 @@ def append_hll_registers(spark, registers: DataFrame, path: str) -> None:
     §1.2).  Precision safety is unchanged: ``hll_merge`` raises when
     the registers' pinned p differs from the store sidecar's, and
     rejects grouped inputs (extra columns)."""
-    old, params = load_hll(spark, path)
-    _merge_and_flip(spark, old, registers, params, path)
+    old, params, version = _read_hll(spark, path)
+    _merge_and_flip(old, registers, params, version, path)
 
 
 def _merge_and_flip(
-    spark, old: DataFrame, new: DataFrame, params: dict, path: str
+    old: DataFrame, new: DataFrame, params: dict, version, path: str
 ) -> None:
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     merged = hll_merge(old, new)
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"p": params["p"]})
-    commit_rewrite(path, cur, new_v)
+    params = {"p": params["p"]}
+    with StoreWriter(path, PARAMS_FILE, version, params=params) as w:
+        w.write(merged.coalesce(1))
 
 
 def estimate_hll_store(spark, path: str) -> DataFrame:

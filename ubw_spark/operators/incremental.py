@@ -253,32 +253,18 @@ def write_agg_store(state: DataFrame, path: str) -> None:
     """Persist a grouped aggregate (e.g. a grouped_agg result) as a
     versioned store — |groups| rows into a fresh version dir, flip
     ``_CURRENT`` (operators/versioned.py)."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
-    cur, new_v, new_root = begin_rewrite(path)
-    state.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, state.schema)
-    write_sidecar(new_root, AGG_PARAMS_FILE, {})
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, AGG_PARAMS_FILE) as w:
+        w.write(state.coalesce(1))
 
 
 def load_agg_store(spark, path: str) -> tuple[DataFrame, dict]:
     """(state, params) from the live version — root resolved ONCE for
     sidecar + data (the double-resolve compaction race rule)."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
+    from ubw_spark.operators.versioned import read_store
 
-    root = resolve_root(path)
-    params = read_sidecar(root, AGG_PARAMS_FILE, "agg")
-    return read_pinned_parquet(spark, root), params
+    return read_store(spark, path, AGG_PARAMS_FILE, "agg")[:2]
 
 
 def fold_batch_into_agg_store(
@@ -298,28 +284,14 @@ def fold_batch_into_agg_store(
     sidecar records the high-water mark and an already-folded id
     becomes a no-op (the append_cms_batch contract; the HLL store's
     max-merge needs none of this)."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter, read_store
 
-    state, params = load_agg_store(spark, path)
-    if batch_id is not None:
-        last = params.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
+    got = read_store(spark, path, AGG_PARAMS_FILE, "agg", batch_id=batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    state, _, version = got
     merged = apply_delta_to_agg(
         state, delta, group_cols, measures, count_col=count_col
     )
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    out_params = {}
-    if batch_id is not None:
-        out_params["last_batch_id"] = batch_id
-    elif params.get("last_batch_id") is not None:
-        out_params["last_batch_id"] = params["last_batch_id"]
-    write_sidecar(new_root, AGG_PARAMS_FILE, out_params)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, AGG_PARAMS_FILE, version, batch_id=batch_id) as w:
+        w.write(merged.coalesce(1))

@@ -263,21 +263,14 @@ def write_ivf_index(
     The store is VERSIONED (operators/versioned.py): rewrites land in a
     fresh ``vNNNNN/`` dir and the ``_CURRENT`` manifest flips in one
     small-object write — same lifecycle as the LSH and gram indexes."""
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
+    from ubw_spark.operators.versioned import StoreWriter
 
-    cur, new_v, root = begin_rewrite(path)
     assigned = assign_ivf_cells(corpus, centroids, vec_col)
-    (
-        assigned.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(root)
-    )
-    from ubw_spark.operators.versioned import pin_schema, write_sidecar
-
-    pin_schema(root, assigned.schema, ("ivf_cell",))
-    write_sidecar(root, IVF_PARAMS_FILE, centroid_params(centroids))
-    commit_rewrite(path, cur, new_v, legacy_prefixes=("ivf_cell=",))
+    with StoreWriter(
+        path, IVF_PARAMS_FILE, params=centroid_params(centroids),
+        legacy_prefixes=("ivf_cell=",),
+    ) as w:
+        w.write(assigned.repartition("ivf_cell"), partition_by="ivf_cell")
 
 
 def probe_ivf_index(
@@ -464,17 +457,17 @@ def append_ivf_batch(
     append into the live version's cell partitions — additive, so
     racing readers see either file set, both complete (the batch is
     simply not yet visible in the older one).  Ids must be unique
-    across appends; removals go through :func:`compact_ivf_index`."""
-    from ubw_spark.operators.versioned import resolve_root
+    across appends; removals go through :func:`compact_ivf_index`.  A
+    batch whose dtypes drifted from the live ``_SCHEMA`` pin raises
+    before any file lands (versioned.append_pinned)."""
+    from ubw_spark.operators.versioned import append_pinned, resolve_root
 
     root = resolve_root(path)
     _check_ivf_params(root, centroids)
-    (
-        assign_ivf_cells(batch, centroids, vec_col)
-        .repartition("ivf_cell")
-        .write.mode("append")
-        .partitionBy("ivf_cell")
-        .parquet(root)
+    append_pinned(
+        assign_ivf_cells(batch, centroids, vec_col).repartition("ivf_cell"),
+        root,
+        "ivf_cell",
     )
 
 
@@ -494,22 +487,12 @@ def compact_ivf_index(
     path).  Cell partitioning is preserved; the swap is the shared
     versioned-manifest flip (operators/versioned.py) — write new
     version, one small-object pointer write, grace-keep the previous."""
-    from ubw_spark.operators.versioned import (
-        compact_partitioned_store,
-        read_sidecar,
-        resolve_root,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import compact_partitioned_store
 
-    stored = read_sidecar(resolve_root(path), IVF_PARAMS_FILE, "ivf index")
     compact_partitioned_store(
         spark, path, drop_ids, id_col, "ivf_cell",
+        sidecar=IVF_PARAMS_FILE, kind="ivf index",
         broadcast_drops=broadcast_drops, legacy_prefixes=("ivf_cell=",),
-        # the quantizer pin carries verbatim — compaction changes
-        # membership, never cell geometry
-        pre_commit=lambda new_root: write_sidecar(
-            new_root, IVF_PARAMS_FILE, stored
-        ),
     )
 
 

@@ -64,14 +64,13 @@ from ubw_spark.operators.dedup import (
     prefilter_min_agree,
 )
 from ubw_spark.operators.versioned import (
-    begin_rewrite,
-    commit_rewrite,
+    StoreWriter,
+    append_pinned,
     current_version,  # re-exported: part of this module's public API
-    pin_schema,
     read_pinned_parquet,
     read_sidecar,
+    read_store,
     resolve_root as _resolve_root,
-    write_sidecar,
 )
 
 #: Params sidecar pinning the banding layout.  Probing or appending
@@ -108,6 +107,11 @@ __all__ = [
     "bless_minhash_index",
     "current_version",
 ]
+
+
+#: The index's subdirectory stores — also the names the pre-manifest
+#: flat layout used at the store root (swept once versioned).
+_SUBSTORES = ("bands", "docs", "sigs")
 
 
 def _bands_path(path: str) -> str:
@@ -158,7 +162,6 @@ def write_minhash_index(
     resolves the manifest first.  Rewrites (a fresh ``overwrite`` or a
     compaction) write a NEW version dir and flip the pointer — never
     mutate a dir a reader may hold open."""
-    cur, new_v, root = begin_rewrite(path)
     sh, sig, banded = banded_minhash(
         df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
@@ -171,24 +174,12 @@ def write_minhash_index(
     # the shingle verify: ~512 B/doc vs KBs/doc of shingles, rewritten
     # alongside docs, read with a two-column pruned scan at probe time
     sig_out = sig.withColumnRenamed("__sig", "sig")
-
-    def _write_bands() -> None:
-        (
-            banded_out.repartition("band")
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(_bands_path(root))
-        )
-        pin_schema(_bands_path(root), banded_out.schema, ("band",))
-
-    def _write_docs() -> None:
-        sh.write.mode("overwrite").parquet(_docs_path(root))
-        pin_schema(_docs_path(root), sh.schema)
-
-    def _write_sigs() -> None:
-        sig_out.write.mode("overwrite").parquet(_sigs_path(root))
-        pin_schema(_sigs_path(root), sig_out.schema)
-
+    params = {
+        "k": k,
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "rows_per_band": rows_per_band,
+    }
     # The three stores are INDEPENDENT projections of the one
     # materialized minhash frame (banded_minhash truncates it eagerly
     # before returning), so their write jobs overlap instead of running
@@ -196,28 +187,21 @@ def write_minhash_index(
     # small last tasks) back-fills with the next store's tasks.  Jobs
     # submitted from driver threads are the documented Spark pattern;
     # nothing here mutates shared state — each thread owns its store
-    # subdirectory, and the manifest flip below happens after ALL three
-    # landed.
+    # subdirectory, and the manifest flips on leaving the writer, after
+    # ALL three landed.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with StoreWriter(
+        path, PARAMS_FILE, params=params, legacy_names=_SUBSTORES
+    ) as w, ThreadPoolExecutor(max_workers=3) as pool:
         for fut in [
-            pool.submit(_write_bands),
-            pool.submit(_write_docs),
-            pool.submit(_write_sigs),
+            pool.submit(
+                w.write, banded_out.repartition("band"), "bands", "band"
+            ),
+            pool.submit(w.write, sh, "docs"),
+            pool.submit(w.write, sig_out, "sigs"),
         ]:
             fut.result()
-    write_sidecar(
-        root,
-        PARAMS_FILE,
-        {
-            "k": k,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "rows_per_band": rows_per_band,
-        },
-    )
-    commit_rewrite(path, cur, new_v, legacy_names=("bands", "docs", "sigs"))
 
 
 def append_minhash_batch(
@@ -244,42 +228,35 @@ def append_minhash_batch(
     Appends go INTO the current version dir (resolved via the
     manifest): an append is additive, so readers racing it see either
     the old or the new file set — both are complete indexes (the batch
-    is simply not yet visible in the old one)."""
+    is simply not yet visible in the old one).  A batch whose dtypes
+    drifted from a store's ``_SCHEMA`` pin raises before its files
+    land (versioned.append_pinned)."""
     root = _resolve_root(path)
     _check_lsh_params(root, k, num_hashes, bands, rows_per_band)
     sh, sig, banded = banded_minhash(
         df, id_col, text_col, id_alias="corpus_id", sh_name="sh",
         k=k, num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
     )
-
-    def _append_bands() -> None:
+    jobs = [
         (
             banded.withColumnRenamed("__band", "band")
             .withColumnRenamed("__key", "key")
-            .repartition("band")
-            .write.mode("append")
-            .partitionBy("band")
-            .parquet(_bands_path(root))
-        )
-
-    def _append_docs() -> None:
-        sh.write.mode("append").parquet(_docs_path(root))
-
-    def _append_sigs() -> None:
-        sig.withColumnRenamed("__sig", "sig").write.mode("append").parquet(
-            _sigs_path(root)
-        )
-
+            .repartition("band"),
+            _bands_path(root),
+            "band",
+        ),
+        (sh, _docs_path(root), None),
+    ]
+    if _has_sigs(root):
+        sig_out = sig.withColumnRenamed("__sig", "sig")
+        jobs.append((sig_out, _sigs_path(root), None))
     # Independent projections of the one materialized batch frame into
     # three disjoint store directories: overlap the append jobs (guide
     # §2.6) exactly as in write_minhash_index.
     from concurrent.futures import ThreadPoolExecutor
 
-    jobs = [_append_bands, _append_docs]
-    if _has_sigs(root):
-        jobs.append(_append_sigs)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(j) for j in jobs]:
+        for fut in [pool.submit(append_pinned, *j) for j in jobs]:
             fut.result()
 
 
@@ -404,23 +381,19 @@ def compacted_index_frames(
     of a web corpus, billions of ids, far past any driver/broadcast
     limit.  Same two-posture pattern as
     dedup.minhash_contamination_pairs(large_probe=...)."""
+    frames, _, _ = read_store(
+        spark, path, None, "minhash index", subs=_SUBSTORES
+    )
+    return _without(frames, drop_ids, id_col, broadcast_drops)
+
+
+def _without(frames, drop_ids, id_col, broadcast_drops):
     drops = drop_ids.select(F.col(drop_ids.columns[0]).alias(id_col))
     maybe_bc = broadcast if broadcast_drops else (lambda d: d)
-    root = _resolve_root(path)
-    bands_kept = read_pinned_parquet(spark, _bands_path(root)).join(
-        maybe_bc(drops), id_col, "left_anti"
+    return tuple(
+        None if f is None else f.join(maybe_bc(drops), id_col, "left_anti")
+        for f in frames
     )
-    docs_kept = read_pinned_parquet(spark, _docs_path(root)).join(
-        maybe_bc(drops), id_col, "left_anti"
-    )
-    sigs_kept = (
-        read_pinned_parquet(spark, _sigs_path(root)).join(
-            maybe_bc(drops), id_col, "left_anti"
-        )
-        if _has_sigs(root)
-        else None
-    )
-    return bands_kept, docs_kept, sigs_kept
 
 
 def compact_minhash_index(
@@ -450,30 +423,21 @@ def compact_minhash_index(
     overwrite.  A reader that resolved the manifest just before the
     flip keeps scanning the previous version, which survives as a
     grace copy until the NEXT compaction garbage-collects it."""
-    old_root = _resolve_root(path)
-    stored_params = read_sidecar(old_root, PARAMS_FILE, "minhash index")
-    cur, new_v, new_root = begin_rewrite(path)
-    bands_kept, docs_kept, sigs_kept = compacted_index_frames(
-        spark, path, drop_ids, id_col, broadcast_drops=broadcast_drops
+    frames, params, version = read_store(
+        spark, path, PARAMS_FILE, "minhash index", subs=_SUBSTORES
     )
-    (
-        bands_kept.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(_bands_path(new_root))
+    bands_kept, docs_kept, sigs_kept = _without(
+        frames, drop_ids, id_col, broadcast_drops
     )
-    pin_schema(_bands_path(new_root), bands_kept.schema, ("band",))
-    docs_kept.write.mode("overwrite").parquet(_docs_path(new_root))
-    pin_schema(_docs_path(new_root), docs_kept.schema)
-    if sigs_kept is not None:
-        sigs_kept.write.mode("overwrite").parquet(_sigs_path(new_root))
-        pin_schema(_sigs_path(new_root), sigs_kept.schema)
     # the layout params carry verbatim — compaction changes membership,
     # never the banding scheme
-    write_sidecar(new_root, PARAMS_FILE, stored_params)
-    # Flip + GC + legacy flat-store cleanup, shared contract:
-    # operators/versioned.py::commit_rewrite.
-    commit_rewrite(path, cur, new_v, legacy_names=("bands", "docs", "sigs"))
+    with StoreWriter(
+        path, PARAMS_FILE, version, params=params, legacy_names=_SUBSTORES
+    ) as w:
+        w.write(bands_kept.repartition("band"), "bands", "band")
+        w.write(docs_kept, "docs")
+        if sigs_kept is not None:
+            w.write(sigs_kept, "sigs")
 
 
 def bless_minhash_index(

@@ -245,23 +245,25 @@ def write_moments_store(
     so batches MERGE EXACTLY by (i, j) addition, which a covariance or
     eigenvector store never could.  A nightly re-fit reads this store
     instead of re-scanning the corpus."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     agg = (
         _numpy_moments(emb, vec_col)
         if method == "numpy"
         else _sql_moments(emb, vec_col)
     )
-    cur, new_v, root = begin_rewrite(path)
-    agg.coalesce(1).write.mode("overwrite").parquet(root)
-    pin_schema(root, agg.schema)
-    write_sidecar(root, MOMENTS_PARAMS, {})
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, MOMENTS_PARAMS) as w:
+        w.write(agg.coalesce(1))
+
+
+def _read_moments(spark, path: str, batch_id: int | None = None):
+    from ubw_spark.operators.versioned import read_store
+
+    # required=False: a pre-sidecar store stays readable, no high-water
+    return read_store(
+        spark, path, MOMENTS_PARAMS, "pca-moments",
+        batch_id=batch_id, required=False,
+    )
 
 
 def append_moments_batch(
@@ -286,34 +288,19 @@ def append_moments_batch(
     version untouched.  ADD-merge is not replay-idempotent: streaming
     callers MUST pass ``batch_id``; the sidecar's high-water mark
     makes a redelivered micro-batch a no-op before any write."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
-    old_root = resolve_root(path)
-    try:
-        params = read_sidecar(old_root, MOMENTS_PARAMS, "pca-moments")
-    except ValueError:
-        params = {}  # pre-sidecar store: still readable, no high-water
-    if batch_id is not None:
-        last = params.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
+    got = _read_moments(batch.sparkSession, path, batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    live, _, version = got
     agg = (
         _numpy_moments(batch, vec_col)
         if method == "numpy"
         else _sql_moments(batch, vec_col)
     )
-    spark = batch.sparkSession
     merged = (
-        read_pinned_parquet(spark, old_root)
-        .unionByName(agg)
+        live.unionByName(agg)
         .groupBy("i", "j")
         .agg(
             F.sum("sxy").alias("sxy"),
@@ -322,26 +309,16 @@ def append_moments_batch(
             F.sum("n").alias("n"),
         )
     )
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    if batch_id is not None:
-        params["last_batch_id"] = batch_id
-    write_sidecar(new_root, MOMENTS_PARAMS, params)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, MOMENTS_PARAMS, version, batch_id=batch_id) as w:
+        w.write(merged.coalesce(1))
 
 
 def pca_fit_from_store(spark, path: str, r: int) -> dict:
     """Fit from the persisted moments alone (no corpus access): one
     (i, j) re-aggregation over ≤ |appends| × d(d+1)/2 rows, then the
     shared driver-side eigh tail."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        resolve_root,
-    )
-
     merged = (
-        read_pinned_parquet(spark, resolve_root(path))
+        _read_moments(spark, path)[0]
         .groupBy("i", "j")
         .agg(
             F.sum("sxy").alias("sxy"),

@@ -390,24 +390,17 @@ def write_ivfpq_index(
     float vector.  ``repartition("ivf_cell")`` first for O(1) files per
     cell (the ivf.write_ivf_index rationale)."""
     from ubw_spark.operators.ivf import assign_ivf_cells
+    from ubw_spark.operators.versioned import StoreWriter
 
-    from ubw_spark.operators.versioned import begin_rewrite, commit_rewrite
-
-    cur, new_v, root = begin_rewrite(path)
     coded = pq_encode(
         assign_ivf_cells(corpus, cell_centroids, vec_col), codebooks
     ).select(id_col, "ivf_cell", "pq_code")
-    (
-        coded.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(root)
-    )
-    from ubw_spark.operators.versioned import pin_schema, write_sidecar
-
-    pin_schema(root, coded.schema, ("ivf_cell",))
-    write_sidecar(root, PQ_PARAMS_FILE, _ivfpq_params(cell_centroids, codebooks))
-    commit_rewrite(path, cur, new_v, legacy_prefixes=("ivf_cell=",))
+    with StoreWriter(
+        path, PQ_PARAMS_FILE,
+        params=_ivfpq_params(cell_centroids, codebooks),
+        legacy_prefixes=("ivf_cell=",),
+    ) as w:
+        w.write(coded.repartition("ivf_cell"), partition_by="ivf_cell")
 
 
 def probe_ivfpq_index(
@@ -499,20 +492,12 @@ def compact_ivfpq_index(
     corpus-fraction drop sets; cell partitioning preserved; swap via
     the versioned-manifest flip — one shared body for both
     cell-partitioned stores (versioned.compact_partitioned_store)."""
-    from ubw_spark.operators.versioned import (
-        compact_partitioned_store,
-        read_sidecar,
-        resolve_root,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import compact_partitioned_store
 
-    stored = read_sidecar(resolve_root(path), PQ_PARAMS_FILE, "ivfpq index")
     compact_partitioned_store(
         spark, path, drop_ids, id_col, "ivf_cell",
+        sidecar=PQ_PARAMS_FILE, kind="ivfpq index",
         broadcast_drops=broadcast_drops, legacy_prefixes=("ivf_cell=",),
-        pre_commit=lambda new_root: write_sidecar(
-            new_root, PQ_PARAMS_FILE, stored
-        ),
     )
 
 

@@ -250,9 +250,9 @@ def grouped_hist_quantiles(
 
 def read_hist_params(path: str) -> dict:
     """(lo, hi, nbins[, last_batch_id]) of the LIVE store version."""
-    from ubw_spark.operators.versioned import read_sidecar, resolve_root
+    from ubw_spark.operators.versioned import read_params
 
-    return read_sidecar(resolve_root(path), PARAMS_FILE, "qh")
+    return read_params(path, PARAMS_FILE, "qh")[0]
 
 
 def write_hist_store(cells: DataFrame, path: str) -> None:
@@ -263,11 +263,7 @@ def write_hist_store(cells: DataFrame, path: str) -> None:
     GLOBAL histograms only: grouped cells are rejected — load_hist
     reads back (bin, cnt) and would silently collapse every segment
     into one curve."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     if set(cells.columns) != {"bin", "cnt"}:
         raise ValueError(
@@ -276,28 +272,19 @@ def write_hist_store(cells: DataFrame, path: str) -> None:
             "lifecycle (reading one back would merge the segments)"
         )
     lo, hi, nb = _check_shape(cells, "write_hist_store")
-    cur, new_v, new_root = begin_rewrite(path)
-    cells.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(new_root, cells.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"lo": lo, "hi": hi, "nbins": nb})
-    commit_rewrite(path, cur, new_v)
+    params = {"lo": lo, "hi": hi, "nbins": nb}
+    with StoreWriter(path, PARAMS_FILE, params=params) as w:
+        w.write(cells.coalesce(1))
 
 
-def load_hist(spark, path: str) -> tuple[DataFrame, dict]:
-    """(cells, params) from the live version — root resolved ONCE for
-    sidecar + data (the load_cms rule), range re-pinned from the
-    sidecar (the authority) onto the column metadata."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
+def _read_hist(spark, path: str, batch_id: int | None = None):
+    """(cells, params, version), or None for a replayed batch_id."""
+    from ubw_spark.operators.versioned import read_store
 
-    root = resolve_root(path)
-    p = read_sidecar(root, PARAMS_FILE, "qh")
-    df = read_pinned_parquet(spark, root)
+    got = read_store(spark, path, PARAMS_FILE, "qh", batch_id=batch_id)
+    if got is None:
+        return None
+    df, p, version = got
     cells = df.select(
         "bin",
         F.col("cnt").alias(
@@ -307,7 +294,14 @@ def load_hist(spark, path: str) -> tuple[DataFrame, dict]:
             },
         ),
     )
-    return cells, p
+    return cells, p, version
+
+
+def load_hist(spark, path: str) -> tuple[DataFrame, dict]:
+    """(cells, params) from the live version — root resolved ONCE for
+    sidecar + data (the load_cms rule), range re-pinned from the
+    sidecar (the authority) onto the column metadata."""
+    return _read_hist(spark, path)[:2]
 
 
 def append_hist_batch(
@@ -325,15 +319,14 @@ def append_hist_batch(
     ADD-merge is not replay-idempotent: at-least-once callers
     (foreachBatch) MUST pass ``batch_id`` — the sidecar keeps the
     high-water mark and an already-folded id is a no-op."""
-    old, p = load_hist(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
+    got = _read_hist(spark, path, batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    old, p, version = got
     new = hist_build(
         batch, value_col, lo=p["lo"], hi=p["hi"], nbins=p["nbins"]
     )
-    _hist_merge_and_flip(spark, old, new, p, path, batch_id)
+    _hist_merge_and_flip(old, new, p, version, path, batch_id)
 
 
 def append_hist_cells(
@@ -345,36 +338,25 @@ def append_hist_cells(
     (round 13, guide §1.2).  Shape safety is unchanged: ``hist_merge``
     raises when the cells' pinned (lo, hi, nbins) differ from the
     store sidecar's."""
-    old, p = load_hist(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    _hist_merge_and_flip(spark, old, cells, p, path, batch_id)
+    got = _read_hist(spark, path, batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    old, p, version = got
+    _hist_merge_and_flip(old, cells, p, version, path, batch_id)
 
 
 def _hist_merge_and_flip(
-    spark, old: DataFrame, new: DataFrame, p: dict, path: str,
+    old: DataFrame, new: DataFrame, p: dict, version, path: str,
     batch_id: int | None,
 ) -> None:
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     merged = hist_merge(old, new)
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    params = {"lo": p["lo"], "hi": p["hi"], "nbins": p["nbins"]}
-    if batch_id is not None:
-        params["last_batch_id"] = batch_id
-    elif p.get("last_batch_id") is not None:
-        params["last_batch_id"] = p["last_batch_id"]
-    write_sidecar(new_root, PARAMS_FILE, params)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(
+        path, PARAMS_FILE, version, batch_id=batch_id,
+        params={"lo": p["lo"], "hi": p["hi"], "nbins": p["nbins"]},
+    ) as w:
+        w.write(merged.coalesce(1))
 
 
 def probe_hist_quantiles(

@@ -60,12 +60,10 @@ from pyspark.sql.functions import broadcast
 from ubw_spark.functions.text import tokens
 from ubw_spark.operators.dedup import portable_hash
 from ubw_spark.operators.versioned import (
-    begin_rewrite,
-    commit_rewrite,
+    StoreWriter,
     compact_partitioned_store,
-    read_sidecar,
-    resolve_root,
-    write_sidecar,
+    read_params,
+    read_store,
 )
 
 __all__ = [
@@ -447,36 +445,12 @@ def phrase_match(
 # ---------------------------------------------------------------- store
 
 
-def _write_stats(
-    root: str,
-    n_docs: int,
-    total_tokens: int,
-    buckets: int,
-    last_batch_id: int | None = None,
-) -> None:
-    # last_batch_id is the exactly-once high-water mark: rewrites that
-    # regenerate the sidecar (compaction, retirement) MUST carry it
-    # through, or a redelivered foreachBatch micro-batch after the
-    # rewrite is re-folded (duplicate postings, double-counted stats).
-    stats: dict = {
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "buckets": buckets,
-    }
-    if last_batch_id is not None:
-        stats["last_batch_id"] = last_batch_id
-    write_sidecar(root, STATS_FILE, stats)
-
-
-def _read_stats_at(root: str, path: str) -> dict:
-    """Sidecar of an ALREADY-RESOLVED version root — callers that also
-    scan postings must resolve once and read both from the same root
-    (versioned.py's readers-resolve-once rule: resolving twice lets a
-    concurrent compaction split stats and postings across versions).
-    Thin wrapper over the shared sidecar reader; ``path`` keeps the
-    caller-facing store path in scope for future messaging."""
-    del path  # the resolved root identifies the store in the error
-    return read_sidecar(root, STATS_FILE, "term index")
+def _stats(n_docs: int, total_tokens: int, buckets: int) -> dict:
+    # no last_batch_id here: the StoreWriter carries the exactly-once
+    # high-water mark through every rewrite that regenerates the
+    # sidecar (compaction, retirement), or a redelivered foreachBatch
+    # micro-batch after the rewrite would be re-folded
+    return {"n_docs": n_docs, "total_tokens": total_tokens, "buckets": buckets}
 
 
 def read_term_stats(path: str) -> dict:
@@ -484,7 +458,7 @@ def read_term_stats(path: str) -> dict:
     raises when the sidecar is missing — scoring with guessed corpus
     stats skews every idf/avgdl silently (the bloom params-sidecar
     rule)."""
-    return _read_stats_at(resolve_root(path), path)
+    return read_params(path, STATS_FILE, "term index")[0]
 
 
 def _bucketed_postings(
@@ -532,23 +506,14 @@ def write_term_index(
     from pyspark.sql import Observation
 
     obs = Observation()
-    cur, new_v, root = begin_rewrite(path)
     posts = _bucketed_postings(
         df, id_col, text_col, buckets, stats_observation=obs,
         parallelism=parallelism,
     )
-    (
-        posts.repartition("tb")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(root)
-    )
-    from ubw_spark.operators.versioned import pin_schema
-
-    pin_schema(root, posts.schema, ("tb",))
-    st = obs.get  # {n_docs, total_tokens} observed during the write
-    _write_stats(root, st["n_docs"], st["total_tokens"], buckets)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, STATS_FILE) as w:
+        w.write(posts.repartition("tb"), partition_by="tb")
+        st = obs.get  # {n_docs, total_tokens} observed during the write
+        w.params = _stats(st["n_docs"], st["total_tokens"], buckets)
 
 
 def append_term_batch(
@@ -580,50 +545,29 @@ def append_term_batch(
     (foreachBatch is at-least-once) MUST pass the framework's
     ``batch_id`` — the sidecar keeps the high-water mark and an
     already-folded id is a no-op BEFORE any write (the
-    append_cms_batch contract)."""
-    from ubw_spark.operators.versioned import link_carryover
-
-    old_root = resolve_root(path)
-    old = _read_stats_at(old_root, path)
-    if batch_id is not None:
-        last = old.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    cur, new_v, new_root = begin_rewrite(path)
-    # A crashed earlier attempt leaves a torn new_root that begin_rewrite
-    # re-issues (the manifest never flipped): clear it, or carryover hits
-    # its own leftover hardlinks and a retry would append the batch's
-    # posting files a SECOND time into the torn dir (mode("append") does
-    # not self-heal the way the overwrite-mode stores do).
-    import shutil as _shutil
-
-    _shutil.rmtree(new_root, ignore_errors=True)
-    link_carryover(old_root, new_root, skip_files=(STATS_FILE,))
+    append_cms_batch contract).  A retry after a crash claims a fresh
+    version number, so a torn earlier attempt is never appended into
+    twice."""
     from pyspark.sql import Observation
 
+    got = read_params(path, STATS_FILE, "term index", batch_id=batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    old, version = got
     obs = Observation()
-    (
-        _bucketed_postings(
-            batch, id_col, text_col, old["buckets"], stats_observation=obs,
-            parallelism=parallelism,
-        )
-        .repartition("tb")
-        .write.mode("append")
-        .partitionBy("tb")
-        .parquet(new_root)
+    posts = _bucketed_postings(
+        batch, id_col, text_col, old["buckets"], stats_observation=obs,
+        parallelism=parallelism,
     )
-    st = obs.get  # {n_docs, total_tokens} observed during the write
-    merged = {
-        "n_docs": old["n_docs"] + st["n_docs"],
-        "total_tokens": old["total_tokens"] + st["total_tokens"],
-        "buckets": old["buckets"],
-    }
-    if batch_id is not None:
-        merged["last_batch_id"] = batch_id
-    elif old.get("last_batch_id") is not None:
-        merged["last_batch_id"] = old["last_batch_id"]
-    write_sidecar(new_root, STATS_FILE, merged)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(path, STATS_FILE, version, batch_id=batch_id) as w:
+        w.carry_over()
+        w.write(posts.repartition("tb"), partition_by="tb")
+        st = obs.get  # {n_docs, total_tokens} observed during the write
+        w.params = _stats(
+            old["n_docs"] + st["n_docs"],
+            old["total_tokens"] + st["total_tokens"],
+            old["buckets"],
+        )
 
 
 def probe_term_index(
@@ -644,12 +588,8 @@ def probe_term_index(
     buckets of the index; the term ``isin`` predicate pushes into the
     parquet scan of those partitions.  The version root is resolved
     ONCE — stats and postings always come from the same version."""
-    from ubw_spark.operators.versioned import read_pinned_parquet
-
     qts = query_terms(query)
-    root = resolve_root(path)
-    stats = _read_stats_at(root, path)
-    idx = read_pinned_parquet(spark, root)
+    idx, stats, _ = read_store(spark, path, STATS_FILE, "term index")
     # Empty query OR fully-retired store → empty result up front: with
     # n_docs = 0 the avgdl literal is total/0, which ANSI constant
     # folding rejects at PLAN time even though no row would evaluate it.
@@ -704,17 +644,13 @@ def probe_term_index_batch(
     in one task — the _score_topk skew rationale)."""
     from pyspark.sql import Window
 
-    from ubw_spark.operators.versioned import read_pinned_parquet
-
-    root = resolve_root(path)
-    stats = _read_stats_at(root, path)
+    idx, stats, _ = read_store(spark, path, STATS_FILE, "term index")
     if stats["n_docs"] == 0:
         # fully-retired store: same plan-time ANSI divide-by-zero guard
         # as probe_term_index
-        idx0 = read_pinned_parquet(spark, root)
         return queries.select(
             F.col(qid_col).alias("qid"),
-            F.lit(None).cast(idx0.schema[id_col].dataType).alias(id_col),
+            F.lit(None).cast(idx.schema[id_col].dataType).alias(id_col),
             F.lit(0).cast("long").alias("n_terms_hit"),
             F.lit(0.0).alias("score"),
             F.lit(1).alias("rank"),
@@ -733,7 +669,6 @@ def probe_term_index_batch(
     )
     # bounded: ≤ `buckets` distinct values regardless of batch size
     bs = sorted(r["tb"] for r in qt.select("tb").distinct().collect())
-    idx = read_pinned_parquet(spark, root)
     hit = idx.where(F.col("tb").isin(bs)).join(
         broadcast(qt.select("term").distinct()), "term", "left_semi"
     )
@@ -777,18 +712,12 @@ def compact_term_index(
     contract).  ``broadcast_drops=False`` plans a shuffled anti-join
     for corpus-fraction drop sets (the two-posture compaction rule,
     versioned.py)."""
-    old_root = resolve_root(path)
-    old = _read_stats_at(old_root, path)
-    # Schema captured from the OLD version: the restat read below must
-    # pass it explicitly — a full retirement writes a version dir with
-    # zero part files, and a schema-INFERRING read of it throws before
-    # the commit, making "retire the last documents" (takedown/GDPR)
-    # permanently impossible.
-    from ubw_spark.operators.versioned import read_pinned_parquet
 
-    schema = read_pinned_parquet(spark, old_root).schema
-
-    def restat(new_root: str) -> None:
+    def restat(new_root: str, schema, old: dict) -> dict:
+        # schema from the OLD version, passed explicitly: a full
+        # retirement writes a version dir with zero part files, and a
+        # schema-INFERRING read of it throws before the commit, making
+        # "retire the last documents" (takedown/GDPR) impossible
         kept = spark.read.schema(schema).parquet(new_root)
         st = (
             kept.select(id_col, "dl")
@@ -809,13 +738,7 @@ def compact_term_index(
                 spark.createDataFrame([], schema).toArrow(),
                 os.path.join(new_root, "part-empty.parquet"),
             )
-        _write_stats(
-            new_root,
-            st["n"],
-            st["t"],
-            old["buckets"],
-            last_batch_id=old.get("last_batch_id"),
-        )
+        return _stats(st["n"], st["t"], old["buckets"])
 
     compact_partitioned_store(
         spark,
@@ -823,6 +746,8 @@ def compact_term_index(
         drop_ids,
         id_col,
         "tb",
+        sidecar=STATS_FILE,
+        kind="term index",
         broadcast_drops=broadcast_drops,
-        pre_commit=restat,
+        restat=restat,
     )

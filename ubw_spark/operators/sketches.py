@@ -198,9 +198,9 @@ def read_cms_params(path: str) -> dict:
     raises if the sidecar is missing (the bloom-store rule).  For
     sidecar + data reads use :func:`load_cms`, which resolves the
     version root ONCE for both."""
-    from ubw_spark.operators.versioned import read_sidecar, resolve_root
+    from ubw_spark.operators.versioned import read_params
 
-    return read_sidecar(resolve_root(path), PARAMS_FILE, "cms")
+    return read_params(path, PARAMS_FILE, "cms")[0]
 
 
 def write_cms_store(sketch: DataFrame, path: str) -> None:
@@ -208,20 +208,30 @@ def write_cms_store(sketch: DataFrame, path: str) -> None:
     sidecar into a fresh version dir, then flip ``_CURRENT`` (previous
     version grace-kept — operators/versioned.py).  ≤ depth*width rows
     of three numbers: one coalesced file, one footer to read back."""
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     w, d = _check_shape(sketch, "write_cms_store")
-    cur, new_v, new_root = begin_rewrite(path)
-    sketch.coalesce(1).write.mode("overwrite").parquet(new_root)
-    from ubw_spark.operators.versioned import pin_schema
+    with StoreWriter(path, PARAMS_FILE, params={"width": w, "depth": d}) as sw:
+        sw.write(sketch.coalesce(1))
 
-    pin_schema(new_root, sketch.schema)
-    write_sidecar(new_root, PARAMS_FILE, {"width": w, "depth": d})
-    commit_rewrite(path, cur, new_v)
+
+def _read_cms(spark, path: str, batch_id: int | None = None):
+    """(sketch, params, version), or None for a replayed batch_id."""
+    from ubw_spark.operators.versioned import read_store
+
+    got = read_store(spark, path, PARAMS_FILE, "cms", batch_id=batch_id)
+    if got is None:
+        return None
+    df, p, version = got
+    sk = df.select(
+        "i",
+        "bucket",
+        F.col("cnt").alias(
+            "cnt",
+            metadata={"cms_width": p["width"], "cms_depth": p["depth"]},
+        ),
+    )
+    return sk, p, version
 
 
 def load_cms(spark, path: str) -> tuple[DataFrame, dict]:
@@ -233,24 +243,7 @@ def load_cms(spark, path: str) -> tuple[DataFrame, dict]:
     from the sidecar (the authority) onto the ``cnt`` metadata, so a
     store whose files were produced elsewhere still carries the
     guard."""
-    from ubw_spark.operators.versioned import (
-        read_pinned_parquet,
-        read_sidecar,
-        resolve_root,
-    )
-
-    root = resolve_root(path)
-    p = read_sidecar(root, PARAMS_FILE, "cms")
-    df = read_pinned_parquet(spark, root)
-    sk = df.select(
-        "i",
-        "bucket",
-        F.col("cnt").alias(
-            "cnt",
-            metadata={"cms_width": p["width"], "cms_depth": p["depth"]},
-        ),
-    )
-    return sk, p
+    return _read_cms(spark, path)[:2]
 
 
 def append_cms_batch(
@@ -273,16 +266,15 @@ def append_cms_batch(
     callers (foreachBatch is at-least-once) MUST pass the framework's
     ``batch_id`` — the sidecar records the high-water mark and an
     already-folded id becomes a no-op on replay."""
-    old, p = load_cms(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
+    got = _read_cms(spark, path, batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    old, p, version = got
     new = cms_build(
         batch, item_col,
         width=p["width"], depth=p["depth"], weight_col=weight_col,
     )
-    _cms_merge_and_flip(spark, old, new, p, path, batch_id)
+    _cms_merge_and_flip(old, new, p, version, path, batch_id)
 
 
 def append_cms_cells(
@@ -296,36 +288,25 @@ def append_cms_cells(
     raises when the cells' pinned (width, depth) differ from the store
     sidecar's.  The batch_id replay contract is the caller's to honour
     exactly as with raw batches."""
-    old, p = load_cms(spark, path)
-    if batch_id is not None:
-        last = p.get("last_batch_id")
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded in
-    _cms_merge_and_flip(spark, old, cells, p, path, batch_id)
+    got = _read_cms(spark, path, batch_id)
+    if got is None:
+        return  # replayed micro-batch: already folded in
+    old, p, version = got
+    _cms_merge_and_flip(old, cells, p, version, path, batch_id)
 
 
 def _cms_merge_and_flip(
-    spark, old: DataFrame, new: DataFrame, p: dict, path: str,
+    old: DataFrame, new: DataFrame, p: dict, version, path: str,
     batch_id: int | None,
 ) -> None:
-    from ubw_spark.operators.versioned import (
-        begin_rewrite,
-        commit_rewrite,
-        pin_schema,
-        write_sidecar,
-    )
+    from ubw_spark.operators.versioned import StoreWriter
 
     merged = cms_merge(old, new)
-    cur, new_v, new_root = begin_rewrite(path)
-    merged.coalesce(1).write.mode("overwrite").parquet(new_root)
-    pin_schema(new_root, merged.schema)
-    params = {"width": p["width"], "depth": p["depth"]}
-    if batch_id is not None:
-        params["last_batch_id"] = batch_id
-    elif p.get("last_batch_id") is not None:
-        params["last_batch_id"] = p["last_batch_id"]
-    write_sidecar(new_root, PARAMS_FILE, params)
-    commit_rewrite(path, cur, new_v)
+    with StoreWriter(
+        path, PARAMS_FILE, version, batch_id=batch_id,
+        params={"width": p["width"], "depth": p["depth"]},
+    ) as w:
+        w.write(merged.coalesce(1))
 
 
 def probe_cms_store(
